@@ -1,10 +1,13 @@
 """CdcEngine — micro-batch replay of a change-event log into the sink.
 
-The Spark lifecycle (SURVEY.md §3, "Spark lifecycle equivalent"):
+The Spark lifecycle of one batch (``apply_batch``), as named phases:
 
-    events → [offset-range batch] → LWW dedup window → skew-aware salted
-    repartition → mapInPandas extraction (Arrow) → MERGE commit (bucketed
-    snapshot swap) → lineage/metrics rows
+    events → [offset-range batch] → LWW winners (one ``max_by`` aggregate,
+    concurrent with the raw-batch stats) → hot repos → parse input
+    (semi-join of the batch on the winning offsets, salted repartition
+    when hot repos exist) → ``mapInArrow`` extraction written once as the
+    envelope → MERGE commit (marks + zero-copy envelope deltas, lineage
+    rows)
 
 Exactly-once: ``snapshot_id == batch_id`` is monotone; a batch whose id is
 ≤ the sink's CURRENT pointer is skipped idempotently, and resume reads
@@ -12,11 +15,12 @@ Exactly-once: ``snapshot_id == batch_id`` is monotone; a batch whose id is
 and restarted at any point (crash before the pointer flip leaves only
 orphan files; the batch reruns deterministically).
 
-Skew handling (north rule): hot repos are detected per batch with a cheap
-``groupBy(repo).count()`` over the deduped winners; events of hot repos get
-a salt derived from ``offset`` so one giant repo spreads over
-``n_salts`` partitions during the (CPU-heavy) parse stage, then the salt is
-dropped — the MERGE stays key-correct because bucketing is on (repo, path).
+Skew handling (north rule): hot repos are detected per batch from the
+cached winners' per-key event counts; events of hot repos get a salt
+derived from ``(path, offset)`` so one giant repo spreads over
+``N_SALTS`` partitions during the (CPU-heavy) parse stage, then the salt
+is dropped — the MERGE stays key-correct because bucketing is on
+(repo, path).
 
 At 10^10-event scale nothing here is driver-bound: per-batch collects are
 O(#partitions × #op kinds + #above-threshold hot repos) — the hot-repo
@@ -27,17 +31,31 @@ ships its tail to the driver.
 from __future__ import annotations
 
 import os
-import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from . import schemas
-from .sink import SnapshotParquetSink
-from .udfs import extract_envelope
+from .extract import validate_missing_field_config
+from .sink import EnvelopedDir, SnapshotParquetSink
+from .udfs import ENVELOPE, extract_envelope
 
 KEY = ["repo", "path"]
+# partitions one hot repo's events spread over during the parse
+N_SALTS = 8
+# envelope record type → the keyed table it is the delta of
+PAYLOAD_TABLES = {"snapshot": "snapshot", "message": "messages",
+                  "attachment": "attachments", "calendar": "calendar_entries"}
+# unwrapped table schema (struct fields + _seq) per record type — known
+# statically, so commit's schema checks need no file IO
+ENV_SCHEMAS = {
+    f.name: StructType(list(f.dataType.fields)
+                       + [StructField("_seq", LongType(), False)])
+    for f in ENVELOPE.fields if f.name != "record_type"
+}
 
 
 @dataclass
@@ -61,24 +79,19 @@ class CdcEngine:
         error_strategy: str = "continue",
         missing_field_strategy: str = "empty",
         missing_field_substitution: str | None = None,
-        n_salts: int = 8,
         hot_key_fraction: float = 0.2,
         hot_key_min: int = 64,
-        extract_partitions: int | None = None,
         broadcast_key_limit: int | None = None,
         folder_expression: str | None = None,
     ):
-        from .extract import validate_missing_field_config
         validate_missing_field_config(missing_field_strategy, missing_field_substitution)
         self.spark = spark
         self.sink = sink
         self.error_strategy = error_strategy
         self.missing_field_strategy = missing_field_strategy
         self.missing_field_substitution = missing_field_substitution
-        self.n_salts = n_salts
         self.hot_key_fraction = hot_key_fraction
         self.hot_key_min = hot_key_min
-        self.extract_partitions = extract_partitions
         # past this many events per batch, the LWW semi-join and the sink's
         # compaction folds fall back from broadcast to shuffle joins — a
         # 10^7-key broadcast built on the driver is a scale-killer.
@@ -145,28 +158,44 @@ class CdcEngine:
                     offset_hi: int | None = None,
                     epoch: int | None = None,
                     stream_id: str | None = None) -> BatchResult:
-        timing = os.environ.get("EMAILCDC_TIMING") == "1"
-        t_last = [time.time()]
-
-        def _mark(phase: str) -> None:
-            if timing:
-                now = time.time()
-                print(f"[timing b{batch_id}] {phase}: {now - t_last[0]:.1f}s",
-                      flush=True)
-                t_last[0] = now
-
+        """Apply one micro-batch as snapshot ``batch_id``; a batch id the
+        sink already holds is skipped.  ``epoch``/``stream_id`` carry the
+        streaming watermark into the manifest."""
         current = self.sink.current_snapshot_id()
         if current is not None and batch_id <= current:
             return BatchResult(batch_id, offset_lo, offset_hi, 0, 0, 0, skipped=True)
+        win_meta = self._winners(batch)
+        try:
+            result, lineage_rows = self._stats(batch, win_meta, batch_id)
+            # the replay path passes its offset range; the streaming path
+            # takes the batch's own bounds
+            if offset_lo is not None:
+                result.offset_lo = offset_lo
+            if offset_hi is not None:
+                result.offset_hi = offset_hi
+            result.hot_repos = self._hot_repos(win_meta, result.event_count)
+            parse_input = self._parse_input(batch, win_meta, result)
+            stage_dir, type_counts = self._stage_envelope(parse_input, batch_id)
+            self._commit(result, lineage_rows, win_meta, stage_dir, type_counts,
+                         epoch, stream_id)
+            return result
+        finally:
+            # a failed commit leaves the envelope dir as an orphan — it is
+            # permanent data once the manifest references it, so cleanup
+            # belongs to vacuum(), not to this code path
+            win_meta.unpersist()
 
-        # LWW winners metadata — ONE groupBy computes both the winning
-        # offsets (the semi-join side) and each winner's op (the delete
-        # mark): max_by(op, offset) rides the same aggregation, so the
-        # separate winner_marks scan + semi-join job the engine used to run
-        # per batch is gone outright (guide §2.4 — remove passes).  Only
-        # key + offset + 1-char op are cached; winner CONTENT still flows
-        # straight from the parquet scan into extraction exactly once.
-        win_meta = (
+    # --- the phases of apply_batch ----------------------------------------------
+
+    @staticmethod
+    def _winners(batch: DataFrame) -> DataFrame:
+        """LWW winners metadata, persisted: ONE groupBy gives each key's
+        winning offset (the semi-join side), the winner's op (the delete
+        mark, via ``max_by(op, offset)``) and the key's event count (the
+        hot-repo input).  Only key + offset + 1-char op are cached; winner
+        CONTENT flows straight from the parquet scan into extraction
+        exactly once."""
+        return (
             batch.groupBy(*KEY)
             .agg(F.max("offset").alias("offset"),
                  F.max_by("op", "offset").alias("op"),
@@ -174,211 +203,154 @@ class CdcEngine:
             .persist()
         )
 
-        try:
-            # Raw-batch stats job (reads only offset/op — Parquet scan prunes
-            # content): per-partition lineage rows (north rule), event count,
-            # op totals.  Driver receives O(#partitions × #op kinds) rows —
-            # constant-size regardless of key cardinality.  The stats collect
-            # and the winners materialization are independent jobs over the
-            # same scan — submit them concurrently (guide §2.6) so the second
-            # back-fills executors the first leaves idle.
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                stats_fut = pool.submit(
-                    lambda: batch.groupBy(
-                        F.spark_partition_id().alias("partition_id"), "op")
-                    .agg(
-                        F.count(F.lit(1)).alias("rows"),
-                        F.min("offset").alias("min_offset"),
-                        F.max("offset").alias("max_offset"),
-                    )
-                    .collect())
-                win_fut = pool.submit(win_meta.count)
-                stat_rows = stats_fut.result()
-                win_fut.result()
-            event_count = sum(r["rows"] for r in stat_rows)
-            per_partition: dict[int, list] = {}
-            op_totals: dict[str, int] = {}
-            for r in stat_rows:
-                pid = int(r["partition_id"])
-                agg = per_partition.setdefault(pid, [0, None, None])
-                agg[0] += r["rows"]
-                agg[1] = r["min_offset"] if agg[1] is None else min(agg[1], r["min_offset"])
-                agg[2] = r["max_offset"] if agg[2] is None else max(agg[2], r["max_offset"])
-                op_totals[r["op"]] = op_totals.get(r["op"], 0) + r["rows"]
-            lineage_rows = [
-                {"batch_id": batch_id, "partition_id": pid, "rows": agg[0],
-                 "min_offset": agg[1], "max_offset": agg[2]}
-                for pid, agg in sorted(per_partition.items())
-            ]
-            upsert_count = op_totals.get("I", 0) + op_totals.get("U", 0)
-            delete_count = op_totals.get("D", 0)
-            if offset_lo is None:  # streaming path: derive bounds from the batch
-                offset_lo = min((a[1] for a in per_partition.values()), default=0)
-            if offset_hi is None:
-                offset_hi = max((a[2] for a in per_partition.values()), default=-1)
-            # Hot-repo detection: threshold the per-repo counts EXECUTOR-side so
-            # the driver receives only repos ABOVE the threshold — the previous
-            # groupBy(partition_id, op, repo).collect() shipped O(#distinct
-            # repos-in-batch × partitions) rows, millions at 10^7-event batches
-            # over a long-tail repo distribution (VERDICT r2).  Skipped outright
-            # when no repo can clear the threshold.
-            # per-repo event counts fold up from the CACHED winners frame
-            # (sum of per-key counts == count over the raw batch — every
-            # event has exactly one key, every key one repo), so hot-repo
-            # detection no longer re-scans the batch parquet (guide §2.4)
-            hot_threshold = max(self.hot_key_min, int(event_count * self.hot_key_fraction))
-            if event_count > hot_threshold:
-                hot_repos = [
-                    r["repo"]
-                    for r in win_meta.groupBy("repo")
-                    .agg(F.sum("_n_events").alias("c"))
-                    .filter(F.col("c") > hot_threshold)
-                    .collect()
-                ]
-            else:
-                hot_repos = []
-            _mark("stats")
+    @staticmethod
+    def _stats(batch: DataFrame, win_meta: DataFrame,
+               batch_id: int) -> tuple[BatchResult, list[dict]]:
+        """Raw-batch stats (reads only offset/op — the parquet scan prunes
+        content): event and op counts, offset bounds and the per-partition
+        lineage rows (north rule).  The driver receives O(#partitions ×
+        #op kinds) rows, whatever the key cardinality.  The stats collect
+        and the winners materialization are independent jobs over the same
+        scan, submitted concurrently so the second back-fills executors the
+        first leaves idle."""
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            stats_fut = pool.submit(
+                lambda: batch.groupBy(
+                    F.spark_partition_id().alias("partition_id"), "op")
+                .agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    F.min("offset").alias("min_offset"),
+                    F.max("offset").alias("max_offset"),
+                )
+                .collect())
+            win_fut = pool.submit(win_meta.count)
+            stat_rows = stats_fut.result()
+            win_fut.result()
+        per_partition: dict[int, list] = {}
+        op_totals: dict[str, int] = {}
+        for r in stat_rows:
+            agg = per_partition.setdefault(int(r["partition_id"]), [0, None, None])
+            agg[0] += r["rows"]
+            agg[1] = r["min_offset"] if agg[1] is None else min(agg[1], r["min_offset"])
+            agg[2] = r["max_offset"] if agg[2] is None else max(agg[2], r["max_offset"])
+            op_totals[r["op"]] = op_totals.get(r["op"], 0) + r["rows"]
+        lineage_rows = [
+            {"batch_id": batch_id, "partition_id": pid, "rows": agg[0],
+             "min_offset": agg[1], "max_offset": agg[2]}
+            for pid, agg in sorted(per_partition.items())
+        ]
+        result = BatchResult(
+            batch_id,
+            offset_lo=min((a[1] for a in per_partition.values()), default=0),
+            offset_hi=max((a[2] for a in per_partition.values()), default=-1),
+            event_count=sum(op_totals.values()),
+            upsert_count=op_totals.get("I", 0) + op_totals.get("U", 0),
+            delete_count=op_totals.get("D", 0),
+        )
+        return result, lineage_rows
 
-            # LWW dedup: last event per key inside the batch wins.  Instead of
-            # a window over the full rows — which shuffles the (multi-KB)
-            # content column — the winning offsets come from the metadata-only
-            # win_meta aggregation above and semi-join the batch on offset.
-            # Broadcast only while the key set is driver-sized: event_count
-            # bounds the winner count, so past broadcast_key_limit the
-            # semi-join runs as a shuffle join instead (VERDICT r1 — a
-            # 10^7-row broadcast at the documented 10^7-event batch size would
-            # OOM the driver).  Winner content is consumed exactly once — by
-            # the extraction pipeline — straight off the parquet scan.
-            win_offs = win_meta.select("offset")
-            win_side = (F.broadcast(win_offs)
-                        if event_count <= self.broadcast_key_limit else win_offs)
-            upserts = (batch.join(win_side, on="offset", how="leftsemi")
-                       .filter(F.col("op") != "D"))
-            # one winning event per key → its op decides the delete mark;
-            # read off the cached win_meta — no extra batch scan/semi-join
-            winner_marks = win_meta.select(
-                *KEY, F.lit(batch_id).cast("long").alias("_seq"),
-                (F.col("op") == "D").alias("is_delete"))
+    def _hot_repos(self, win_meta: DataFrame, event_count: int) -> tuple:
+        """Repos holding more than ``hot_key_fraction`` of the batch (and
+        at least ``hot_key_min`` events).  Per-repo counts fold up from the
+        cached winners (every event has one key, every key one repo), and
+        the threshold is applied executor-side, so the driver receives
+        only the repos above it.  No job when no repo can clear it."""
+        threshold = max(self.hot_key_min, int(event_count * self.hot_key_fraction))
+        if event_count <= threshold:
+            return ()
+        return tuple(
+            r["repo"]
+            for r in win_meta.groupBy("repo")
+            .agg(F.sum("_n_events").alias("c"))
+            .filter(F.col("c") > threshold)
+            .collect())
 
-            # --- skew: hot repos get an offset-derived salt for the parse ------
-            # Parse-stage partitioning: the no-shuffle path inherits the
-            # scan partitioning (session sets files.maxPartitionBytes low
-            # enough for full parallelism — python parse cost per byte is
-            # ~10× scan cost per byte).  Hot repos get an offset-derived
-            # salt and an explicit repartition so one giant repo spreads
-            # over n_salts partitions (north rule's skew contract).
-            if hot_repos:
-                n_parts = self.extract_partitions or self.spark.sparkContext.defaultParallelism
-                salted = upserts.withColumn(
-                    "_salt",
-                    F.when(
-                        F.col("repo").isin(hot_repos),
-                        F.pmod(F.xxhash64("path", "offset"), F.lit(self.n_salts)),
-                    ).otherwise(F.lit(0)),
-                ).repartition(n_parts, "repo", "_salt").drop("_salt")
-            elif self.extract_partitions:
-                salted = upserts.repartition(self.extract_partitions)
-            else:
-                salted = upserts
+    def _parse_input(self, batch: DataFrame, win_meta: DataFrame,
+                     result: BatchResult) -> DataFrame:
+        """The winning upsert events, partitioned for the parse.
 
-            # --- extraction (the payload) ---------------------------------------
-            # The envelope is parsed ONCE and written to parquet partitioned
-            # by record_type — and that write IS the delta commit for the
-            # three payload tables: the sink registers each record_type
-            # subdir directly (EnvelopedDir), so the multi-KB payload hits
-            # disk exactly once per batch (the old flow re-read and
-            # re-wrote it per table).  A crashed commit leaves only an
-            # orphan envelope dir; vacuum() removes it.
-            envelope = extract_envelope(
-                salted, self.error_strategy,
-                self.missing_field_strategy, self.missing_field_substitution,
-                folder_expression=self.folder_expression
-            ).withColumn("_seq", F.lit(batch_id).cast("long"))
-            stage_dir = os.path.join(self.sink.root, "data", "_envelope",
-                                     f"batch-{batch_id}")
-            # FLAT write — record_type stays a data column.  partitionBy
-            # forced a per-task sort of the multi-KB envelope rows plus up
-            # to 5× the files (measured +0.7 s per 500k-event batch warm,
-            # 128 vs 32 files); per-type reads instead prune via the
-            # record_type column + parquet column pruning (a messages read
-            # decodes only the message struct — other types' bytes are
-            # never touched).  Per-type presence rides the SAME write
-            # action as an Observation (no extra job).
-            from pyspark.sql import Observation
-            obs = Observation()
-            observed = envelope.observe(obs, *[
-                F.count(F.when(F.col("record_type") == rt, 1)).alias(rt)
-                for rt in ("snapshot", "message", "attachment",
-                           "calendar", "failure")])
-            observed.write.mode("overwrite").parquet(stage_dir)
-            type_counts = obs.get
-            _mark("extract+stage")
+        LWW dedup is a semi-join of the batch on the winning offsets, so
+        the multi-KB content column is never shuffled.  The offsets are
+        broadcast only while the key set is driver-sized: the event count
+        bounds the winner count, and past ``broadcast_key_limit`` the
+        semi-join runs as a shuffle join.  Without hot repos the parse
+        inherits the scan partitioning; with them, hot-repo events get an
+        offset-derived salt and an explicit repartition so one giant repo
+        spreads over ``N_SALTS`` partitions."""
+        win_offs = win_meta.select("offset")
+        win_side = (F.broadcast(win_offs)
+                    if result.event_count <= self.broadcast_key_limit else win_offs)
+        upserts = (batch.join(win_side, on="offset", how="leftsemi")
+                   .filter(F.col("op") != "D"))
+        if not result.hot_repos:
+            return upserts
+        salt = F.when(
+            F.col("repo").isin(list(result.hot_repos)),
+            F.pmod(F.xxhash64("path", "offset"), F.lit(N_SALTS)),
+        ).otherwise(F.lit(0))
+        return (upserts.withColumn("_salt", salt)
+                .repartition(self.spark.sparkContext.defaultParallelism,
+                             "repo", "_salt")
+                .drop("_salt"))
 
-            stats = {
-                "event_count": event_count,
-                "upsert_count": upsert_count,
-                "delete_count": delete_count,
-                "hot_repos": hot_repos,
-            }
-            # tables whose record type never appeared in this batch have no
-            # envelope partition — skip them entirely; the rest register
-            # their envelope subdir as the delta (zero-copy).  The snapshot
-            # MERGE-target rows ride the envelope too (one per upsert,
-            # sha256 computed in the extract worker), so no table write
-            # happens at commit time on the non-compacting path at all.
-            from pyspark.sql.types import LongType, StructField, StructType
+    def _stage_envelope(self, parse_input: DataFrame,
+                        batch_id: int) -> tuple[str, dict]:
+        """Parse once and write the envelope to the batch's stage dir; that
+        write IS the delta of every payload table — the sink registers the
+        dir per record type (EnvelopedDir), so the multi-KB payload hits
+        disk exactly once per batch.  The write is FLAT (record_type stays
+        a data column): per-type reads prune by that column and parquet
+        column pruning instead of a partitionBy sort.  Per-type row counts
+        ride the same write action as an Observation (no extra job).  A
+        crashed commit leaves only an orphan stage dir; vacuum() removes
+        it."""
+        envelope = extract_envelope(
+            parse_input, self.error_strategy,
+            self.missing_field_strategy, self.missing_field_substitution,
+            folder_expression=self.folder_expression,
+        ).withColumn("_seq", F.lit(batch_id).cast("long"))
+        stage_dir = os.path.join(self.sink.root, "data", "_envelope",
+                                 f"batch-{batch_id}")
+        obs = Observation()
+        envelope.observe(obs, *[
+            F.count(F.when(F.col("record_type") == rt, 1)).alias(rt)
+            for rt in (*PAYLOAD_TABLES, "failure")
+        ]).write.mode("overwrite").parquet(stage_dir)
+        return stage_dir, obs.get
 
-            from .sink import EnvelopedDir
-            from .udfs import ENVELOPE
+    def _commit(self, result: BatchResult, lineage_rows: list[dict],
+                win_meta: DataFrame, stage_dir: str, type_counts: dict,
+                epoch: int | None, stream_id: str | None) -> None:
+        """MERGE-commit the batch: the stage dir registered zero-copy as
+        the delta of each record type present in it, one mark per key
+        (the winner's op decides the delete flag — read off the cached
+        winners, no extra scan) and the lineage rows."""
+        def enveloped(record_type: str) -> EnvelopedDir:
+            return EnvelopedDir(stage_dir, record_type,
+                                where=f"record_type = '{record_type}'",
+                                schema=ENV_SCHEMAS[record_type])
 
-            def _env_schema(record_type: str) -> StructType:
-                # unwrapped table schema (struct fields + _seq) — known
-                # statically, so commit's schema checks need no file IO
-                struct = next(f.dataType for f in ENVELOPE.fields
-                              if f.name == record_type)
-                return StructType(list(struct.fields)
-                                  + [StructField("_seq", LongType(), False)])
-
-            upsert_tables: dict = {}
-            for record_type, table in (("snapshot", "snapshot"),
-                                       ("message", "messages"),
-                                       ("attachment", "attachments"),
-                                       ("calendar", "calendar_entries")):
-                if type_counts.get(record_type, 0) > 0:
-                    upsert_tables[table] = EnvelopedDir(
-                        stage_dir, record_type,
-                        where=f"record_type = '{record_type}'",
-                        schema=_env_schema(record_type))
-            self.sink.commit(
-                batch_id=batch_id,
-                offset_lo=offset_lo,
-                offset_hi=offset_hi,
-                upserts=upsert_tables,
-                delete_keys=None,
-                appends=({"failures": EnvelopedDir(
-                              stage_dir, "failure",
-                              where="record_type = 'failure'",
-                              schema=_env_schema("failure"))}
-                         if type_counts.get("failure", 0) > 0 else {}),
-                append_rows={"lineage": (lineage_rows, schemas.LINEAGE)},
-                stats=stats,
-                # winner marks are already one-row-per-key, derived from a
-                # content-pruned scan (no extra distinct/join jobs)
-                marks=winner_marks,
-                epoch=epoch,
-                stream_id=stream_id,
-                approx_batch_keys=event_count,
-            )
-            _mark("commit")
-            return BatchResult(batch_id, offset_lo, offset_hi,
-                               event_count, upsert_count, delete_count,
-                               hot_repos=tuple(hot_repos))
-        finally:
-            # a failed commit leaves the envelope dir as an orphan — it is
-            # permanent data once the manifest references it, so cleanup
-            # belongs to vacuum(), not to this code path
-            win_meta.unpersist()
+        present = [rt for rt, n in type_counts.items() if n > 0]
+        self.sink.commit(
+            batch_id=result.batch_id,
+            offset_lo=result.offset_lo,
+            offset_hi=result.offset_hi,
+            upserts={PAYLOAD_TABLES[rt]: enveloped(rt)
+                     for rt in present if rt in PAYLOAD_TABLES},
+            appends=({"failures": enveloped("failure")}
+                     if "failure" in present else {}),
+            append_rows={"lineage": (lineage_rows, schemas.LINEAGE)},
+            stats={"event_count": result.event_count,
+                   "upsert_count": result.upsert_count,
+                   "delete_count": result.delete_count,
+                   "hot_repos": list(result.hot_repos)},
+            marks=win_meta.select(
+                *KEY, F.lit(result.batch_id).cast("long").alias("_seq"),
+                (F.col("op") == "D").alias("is_delete")),
+            epoch=epoch,
+            stream_id=stream_id,
+            approx_batch_keys=result.event_count,
+        )
 
     # --- full replay --------------------------------------------------------------
 

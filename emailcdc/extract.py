@@ -1,8 +1,8 @@
 """Vectorized email/calendar extraction payload.
 
 Re-expresses the reference bundle's per-record transforms as pure-Python
-functions driven from Arrow-batched pandas UDFs (``mapInPandas``) — no
-per-row Python UDFs (``F.udf``) anywhere.
+functions driven from the Arrow-batched ``mapInArrow`` stage in udfs.py —
+no per-row Python UDFs (``F.udf``) anywhere.
 
 Reference parity map (file:line cites relative to /root/reference/):
 - ``split_address``   ← AbstractJavaMailProcessor.java:118-132 (E1)
@@ -697,7 +697,7 @@ def pst_message_to_email(msg) -> dict:
     }
 
 
-# --- per-event dispatch (used by the engine's mapInPandas stage) ------------
+# --- per-event dispatch (used by the engine's mapInArrow stage) ------------
 
 
 def validate_missing_field_config(strategy: str, substitution: str | None) -> None:
@@ -739,7 +739,8 @@ def extract_event(repo: str, path: str, offset, commit: str | None,
                   error_strategy: str = "continue",
                   missing_field_strategy: str = "empty",
                   missing_field_substitution: str | None = None,
-                  folder_override: str | None = None) -> dict:
+                  folder_override: str | None = None,
+                  content_sha256: str | None = None) -> dict:
     """Process one change event's content → {messages, attachments,
     calendar_entries, failures} lists of dicts (schemas.py shapes).
 
@@ -753,15 +754,15 @@ def extract_event(repo: str, path: str, offset, commit: str | None,
     over FlowFile attributes; here a Spark SQL expression over the event
     columns, evaluated JVM-side in udfs.extract_envelope); absent, the
     defaults mirror the reference flows: mbox → filename (= path), eml →
-    "".
+    "".  ``content_sha256`` is ``sha256_hex(content)`` when the caller
+    already has it (udfs hashes every event once, for the snapshot row).
     """
     out = {"messages": [], "attachments": [], "calendar_entries": [], "failures": []}
-    # sha only matters for rows we actually emit — skip it for source-code
-    # langs (they produce no payload rows; the snapshot sha is computed
-    # JVM-side with F.sha2 in the engine).
-    sha = (sha256_hex(content)
-           if content is not None and lang in ("eml", "mbox", "ics", "pst")
-           else None)
+    # the sha only lands in payload and failure rows, which only the email
+    # langs emit — source-code langs skip the hash
+    sha = content_sha256
+    if sha is None and content is not None and lang in ("eml", "mbox", "ics", "pst"):
+        sha = sha256_hex(content)
 
     def _fail(err: str) -> None:
         out["failures"].append(

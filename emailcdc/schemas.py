@@ -77,17 +77,6 @@ CALENDAR_ENTRY = StructType(
 
 # --- engine tables ----------------------------------------------------------
 
-# Source snapshot table (BASELINE.json input_hint shape).
-REPOS = StructType(
-    [
-        StructField("repo", StringType(), False),
-        StructField("path", StringType(), False),
-        StructField("commit", StringType(), True),
-        StructField("lang", StringType(), True),
-        StructField("content", StringType(), True),
-    ]
-)
-
 # Change-event stream (binlog/WAL analog of the NiFi FlowFile queue).
 CHANGE_EVENTS = StructType(
     [
@@ -185,20 +174,6 @@ CALENDAR_ENTRIES = StructType(
     ]
     + list(CALENDAR_ENTRY.fields)
     + [StructField("content_sha256", StringType(), True)]
-)
-
-# Control table: per-batch commit manifests (exactly-once core).
-COMMIT_MANIFEST = StructType(
-    [
-        StructField("batch_id", LongType(), False),
-        StructField("offset_lo", LongType(), False),
-        StructField("offset_hi", LongType(), False),
-        StructField("snapshot_id", LongType(), False),
-        StructField("event_count", LongType(), True),
-        StructField("upsert_count", LongType(), True),
-        StructField("delete_count", LongType(), True),
-        StructField("status", StringType(), True),
-    ]
 )
 
 # Per-partition lineage/metrics rows (north rule requirement).

@@ -20,7 +20,7 @@ def get_spark(app: str = "emailcdc", master: str | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.partitions",
                 str(shuffle_partitions or _default_parallelism(master)))
-        # small scan splits: the engine's mapInPandas parse costs ~10x the
+        # small scan splits: the engine's mapInArrow parse costs ~10x the
         # scan per byte, so feed it many partitions (default 128m would
         # pack a whole micro-batch into a handful of tasks)
         .config("spark.sql.files.maxPartitionBytes", "4m")

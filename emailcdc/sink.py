@@ -42,6 +42,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -126,7 +127,7 @@ class SnapshotParquetSink:
         self.root = root
         self.n_buckets = n_buckets
         self.compact_every = compact_every
-        # past this many keys per batch, compaction folds join batch_keys
+        # past this many keys per batch, compaction folds join the batch keys
         # by shuffle instead of broadcast (driver-sized broadcasts only)
         self.broadcast_key_limit = broadcast_key_limit
         os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
@@ -209,8 +210,21 @@ class SnapshotParquetSink:
             out = out.unionByName(f, allowMissingColumns=True)
         return out
 
-    def read_table(self, table: str, buckets: list[int] | None = None,
-                   with_seq: bool = False) -> DataFrame | None:
+    def _live_rows(self, rows: DataFrame, manifest: Manifest) -> DataFrame:
+        """LWW visibility: keep a row iff its ``_seq`` is its key's latest
+        mark in ``manifest`` and that mark is not a delete."""
+        latest = self._latest_marks(manifest)
+        if latest is None:
+            return rows
+        live = latest.filter(~F.col("is_delete")).select(
+            *KEY, F.col(SEQ).alias("_live_seq"))
+        return (
+            rows.join(live, on=KEY, how="inner")
+            .filter(F.col(SEQ) == F.col("_live_seq"))
+            .drop("_live_seq")
+        )
+
+    def read_table(self, table: str) -> DataFrame | None:
         """Current visible snapshot of a table (MOR merge of base+deltas)."""
         manifest = self.read_manifest()
         if manifest is None or table not in manifest.tables:
@@ -219,20 +233,8 @@ class SnapshotParquetSink:
         if rows is None:
             return None
         if table in APPEND_TABLES:
-            return rows.drop(SEQ) if SEQ in rows.columns and not with_seq else rows
-        if buckets is not None:
-            rows = rows.filter(bucket_expr(self.n_buckets).isin(buckets))
-        latest = self._latest_marks(manifest)
-        if latest is not None:
-            live = latest.filter(~F.col("is_delete")).select(
-                *KEY, F.col(SEQ).alias("_live_seq"))
-            rows = (
-                rows.join(live, on=KEY, how="inner")
-                .filter(F.col(SEQ) == F.col("_live_seq"))
-                .drop("_live_seq")
-            )
-        if not with_seq:
-            rows = rows.drop(SEQ)
+            return rows.drop(SEQ) if SEQ in rows.columns else rows
+        rows = self._live_rows(rows, manifest).drop(SEQ)
         return rows.drop("_bucket") if "_bucket" in rows.columns else rows
 
     # --- schema evolution ----------------------------------------------------
@@ -272,11 +274,9 @@ class SnapshotParquetSink:
         batch_id: int,
         offset_lo: int,
         offset_hi: int,
-        upserts: dict[str, DataFrame],
-        delete_keys: DataFrame | None,
-        appends: dict[str, DataFrame] | None = None,
+        upserts: dict[str, DataFrame | EnvelopedDir],
+        appends: dict[str, EnvelopedDir] | None = None,
         stats: dict | None = None,
-        batch_keys: DataFrame | None = None,
         append_rows: dict[str, tuple[list, object]] | None = None,
         marks: DataFrame | None = None,
         epoch: int | None = None,
@@ -286,56 +286,42 @@ class SnapshotParquetSink:
         """MOR-commit a batch and atomically publish snapshot ``batch_id``.
 
         ``upserts[table]`` rows replace ALL existing rows for their key
-        (visibility via the shared marks journal); ``delete_keys`` removes
-        keys.  Writes are pure appends; every ``compact_every`` commits the
-        sink is folded into fresh base files instead.
+        (visibility via the shared marks journal).  ``marks`` is the
+        batch's one-row-per-key journal ``(repo, path, _seq, is_delete)``
+        — how deletes are committed; without it every upserted key is
+        marked live.  ``appends`` registers append-only tables' rows
+        already on disk, ``append_rows`` writes small driver-side row
+        lists.  Writes are pure appends; every ``compact_every`` commits
+        the sink is folded into fresh base files instead.
         """
         prev = self.read_manifest()
         snapshot_id = batch_id
         appends = appends or {}
         append_rows = append_rows or {}
-        # broadcast guard for the fold joins below: callers that know the
-        # batch size (the engine passes its event count, an upper bound on
-        # touched keys) disable broadcast past broadcast_key_limit
-        self._fold_broadcast_ok = (
-            approx_batch_keys is None
-            or approx_batch_keys <= self.broadcast_key_limit)
         compacting = prev is not None and prev.delta_depth + 1 >= self.compact_every
 
-        # ---- marks: one row per touched key, delete-flagged.  Callers that
-        # already hold a deduped per-key frame (the engine's LWW winners)
-        # pass `marks` directly; otherwise it is derived from
-        # upserts/delete_keys.
-        if marks is None:
-            if batch_keys is None:
-                frames = [df.select(*KEY) for df in upserts.values()]
-                if delete_keys is not None:
-                    frames.append(delete_keys.select(*KEY))
-                batch_keys = None
-                for kf in frames:
-                    batch_keys = kf if batch_keys is None else batch_keys.unionByName(kf)
-                if batch_keys is not None:
-                    batch_keys = batch_keys.distinct()
-            if batch_keys is not None:
-                if delete_keys is not None:
-                    marks = batch_keys.join(
-                        delete_keys.select(*KEY).withColumn("is_delete", F.lit(True)),
-                        on=KEY, how="left",
-                    ).select(
-                        *KEY, F.lit(batch_id).cast("long").alias(SEQ),
-                        F.coalesce("is_delete", F.lit(False)).alias("is_delete"),
-                    )
-                else:
-                    marks = batch_keys.select(
-                        *KEY, F.lit(batch_id).cast("long").alias(SEQ),
-                        F.lit(False).alias("is_delete"),
-                    )
+        # ---- marks: one row per touched key, delete-flagged.  The engine
+        # passes its LWW winners; otherwise every upserted key is live.
+        if marks is None and upserts:
+            touched = reduce(lambda a, b: a.unionByName(b),
+                             [df.select(*KEY) for df in upserts.values()])
+            marks = touched.distinct().select(
+                *KEY, F.lit(batch_id).cast("long").alias(SEQ),
+                F.lit(False).alias("is_delete"))
 
         new_tables: dict[str, list[str]] = {}
         new_schemas: dict[str, str] = {}
         marks_list = list(prev.marks) if prev else []
         marks_dir = os.path.join(self.root, "data", "_marks", f"snap-{snapshot_id}")
-        batch_keys = marks.select(*KEY) if marks is not None else batch_keys
+        # the keys compaction folds drop from the old visible rows; a
+        # broadcast only while driver-sized — callers that know the batch
+        # size (the engine passes its event count, an upper bound on
+        # touched keys) disable it past broadcast_key_limit
+        fold_keys = None
+        if marks is not None:
+            fold_keys = marks.select(*KEY)
+            if approx_batch_keys is None or approx_batch_keys <= self.broadcast_key_limit:
+                fold_keys = F.broadcast(fold_keys)
 
         def _stamped_frame(val) -> DataFrame:
             """Upsert rows with the SEQ stamp, whatever form they arrived in."""
@@ -355,7 +341,7 @@ class SnapshotParquetSink:
         def _write_keyed(table: str, val, out_dir: str) -> None:
             stamped = _stamped_frame(val)
             if compacting:
-                old_visible = self._visible_before(prev, table, batch_keys)
+                old_visible = self._visible_before(prev, table, fold_keys)
                 if old_visible is not None:
                     stamped = old_visible.unionByName(stamped, allowMissingColumns=True)
             # `_bucket` is a clustered data column (NOT partitionBy: multiple
@@ -433,7 +419,7 @@ class SnapshotParquetSink:
                 folded = marks
                 if latest is not None:
                     keep = latest.filter(~F.col("is_delete")).join(
-                        self._maybe_broadcast(batch_keys), on=KEY, how="left_anti")
+                        fold_keys, on=KEY, how="left_anti")
                     folded = keep.unionByName(marks)
                 folded.repartition(min(self.n_buckets, 32)).write \
                     .mode("overwrite").parquet(marks_dir)
@@ -448,37 +434,27 @@ class SnapshotParquetSink:
 
         for table in APPEND_TABLES:
             prev_dirs = list(prev.tables.get(table, [])) if prev else []
-            rows = appends.get(table)
+            prev_schema = prev.schemas.get(table) if prev else None
+            env = appends.get(table)
             local = append_rows.get(table)
-            out_dir = os.path.join(self.root, "data", table, f"snap-{snapshot_id}")
-            if isinstance(rows, EnvelopedDir):
-                if _has_parquet(rows.dir):
-                    entry = {"dir": rows.dir, "field": rows.field,
-                             "where": rows.where}
-                    new_tables[table] = prev_dirs + [entry]
-                    new_schemas[table] = self._merged_schema_json(
-                        prev.schemas.get(table) if prev else None,
-                        rows.schema if rows.schema is not None
-                        else self._read_dirs([entry]).schema)
-                else:
-                    new_tables[table] = prev_dirs
-                    if prev and table in prev.schemas:
-                        new_schemas[table] = prev.schemas[table]
+            if env is not None and _has_parquet(env.dir):
+                entry = {"dir": env.dir, "field": env.field, "where": env.where}
+                new_tables[table] = prev_dirs + [entry]
+                new_schemas[table] = self._merged_schema_json(
+                    prev_schema, env.schema if env.schema is not None
+                    else self._read_dirs([entry]).schema)
             elif local is not None and local[0]:
                 row_list, schema = local
+                out_dir = os.path.join(self.root, "data", table, f"snap-{snapshot_id}")
                 os.makedirs(out_dir, exist_ok=True)
                 self._write_local_parquet(
                     os.path.join(out_dir, "part-0.parquet"), row_list, schema)
                 new_tables[table] = prev_dirs + [out_dir]
                 new_schemas[table] = schema.json()
-            elif rows is not None and not rows.isEmpty():
-                rows.write.mode("overwrite").parquet(out_dir)
-                new_tables[table] = prev_dirs + [out_dir]
-                new_schemas[table] = rows.schema.json()
             else:
                 new_tables[table] = prev_dirs
-                if prev and table in prev.schemas:
-                    new_schemas[table] = prev.schemas[table]
+                if prev_schema:
+                    new_schemas[table] = prev_schema
 
         manifest = Manifest(
             snapshot_id=snapshot_id,
@@ -507,33 +483,18 @@ class SnapshotParquetSink:
         return manifest
 
     def _visible_before(self, prev: Manifest, table: str,
-                        batch_keys: DataFrame | None) -> DataFrame | None:
-        """Visible rows of ``table`` at the previous snapshot, minus keys
-        replaced by the current batch (used by compaction folds)."""
+                        fold_keys: DataFrame | None) -> DataFrame | None:
+        """Visible rows of ``table`` at the previous snapshot, minus the
+        keys the current batch replaces (used by compaction folds)."""
         rows = self._read_dirs(prev.tables.get(table, []))
         if rows is None:
             return None
         if "_bucket" in rows.columns:
             rows = rows.drop("_bucket")
-        latest = self._latest_marks(prev)
-        if latest is not None:
-            live = latest.filter(~F.col("is_delete")).select(
-                *KEY, F.col(SEQ).alias("_live_seq"))
-            rows = (
-                rows.join(live, on=KEY, how="inner")
-                .filter(F.col(SEQ) == F.col("_live_seq"))
-                .drop("_live_seq")
-            )
-        if batch_keys is not None:
-            rows = rows.join(self._maybe_broadcast(batch_keys),
-                             on=KEY, how="left_anti")
+        rows = self._live_rows(rows, prev)
+        if fold_keys is not None:
+            rows = rows.join(fold_keys, on=KEY, how="left_anti")
         return rows
-
-    def _maybe_broadcast(self, df: DataFrame) -> DataFrame:
-        """Broadcast only driver-sized batch-key frames (see commit())."""
-        if getattr(self, "_fold_broadcast_ok", True):
-            return F.broadcast(df)
-        return df
 
     @staticmethod
     def _write_local_parquet(path: str, rows: list[dict], spark_schema) -> None:
@@ -584,15 +545,15 @@ class SnapshotParquetSink:
         old_every = self.compact_every
         self.compact_every = 0  # force
         try:
-            empty_keys = self.spark.createDataFrame([], "repo string, path string")
             return self.commit(
                 batch_id=batch_id, offset_lo=prev.offset_lo,
                 offset_hi=prev.offset_hi,
                 upserts={t: self.spark.createDataFrame(
                     [], self.read_table(t).schema) for t in KEYED_TABLES
                     if prev.tables.get(t)},
-                delete_keys=None, batch_keys=empty_keys,
                 stats={"compaction": True},
+                marks=self.spark.createDataFrame(
+                    [], "repo string, path string, _seq long, is_delete boolean"),
             )
         finally:
             self.compact_every = old_every

@@ -29,6 +29,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from . import schemas
 from .engine import CdcEngine
@@ -57,67 +58,6 @@ def stream_events(spark: SparkSession, source_dir: str,
     return reader.parquet(source_dir)
 
 
-def stream_events_kafka(spark: SparkSession, bootstrap_servers: str,
-                        topic: str, *,
-                        starting_offsets: str = "earliest",
-                        max_offsets_per_trigger: int | None = None) -> DataFrame:
-    """readStream over a Kafka topic carrying JSON-encoded change events
-    (CHANGE_EVENTS schema in the message value).
-
-    Drop-in alternative to the file source: the ``foreachBatch`` body in
-    ``run_stream`` is source-agnostic, so swapping sources changes nothing
-    downstream.  Requires the ``spark-sql-kafka`` package on the classpath
-    (not shipped in this sandbox — constructing the reader without it
-    fails at ``load()`` with Spark's standard missing-source error).
-    ``maxOffsetsPerTrigger`` is the Kafka analog of the file source's
-    ``maxFilesPerTrigger`` micro-batching (FLOWFILE_COUNT,
-    ExtractEMLFile.java:34-42)."""
-    from pyspark.sql import functions as F
-
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger",
-                               str(max_offsets_per_trigger))
-    raw = reader.load()
-    return raw.select(
-        F.from_json(F.col("value").cast("string"),
-                    schemas.CHANGE_EVENTS).alias("e")
-    ).select("e.*")
-
-
-def run_stream(engine: CdcEngine, events: DataFrame, checkpoint_dir: str,
-               *, available_now: bool = True,
-               processing_time: str | None = None):
-    """Drive the engine from a streaming DataFrame.
-
-    ``available_now=True`` (default) processes everything currently in the
-    source then stops — the testable drain mode; pass
-    ``processing_time='10 seconds'`` instead for a long-running tail.
-    Returns the StreamingQuery (caller awaits/stops it).
-    """
-
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        sid = _checkpoint_stream_id(checkpoint_dir)
-        last = engine.last_epoch(stream_id=sid)
-        if last is not None and int(epoch_id) <= last:
-            return  # THIS checkpoint re-delivered an already-committed epoch
-        engine.apply_batch(batch_df, batch_id=engine.next_batch_id(),
-                           epoch=int(epoch_id), stream_id=sid)
-
-    writer = events.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
 def run_stream_fanout(routes: dict, events: DataFrame, checkpoint_dir: str,
                       *, available_now: bool = True,
                       processing_time: str | None = None):
@@ -130,7 +70,7 @@ def run_stream_fanout(routes: dict, events: DataFrame, checkpoint_dir: str,
     committed, B didn't, query died) heals on restart: Spark re-delivers
     the unfinished epoch, A's watermark skips it, B applies it.  This is
     per-sink idempotence on top of ONE replayable source — the same
-    composition `run_stream` uses, multiplied; no cross-sink transaction
+    composition a single sink uses, multiplied; no cross-sink transaction
     is needed because each sink's manifest is its own commit log.
 
     Scope: the heal window is the epochs the CHECKPOINT has not yet
@@ -152,8 +92,12 @@ def run_stream_fanout(routes: dict, events: DataFrame, checkpoint_dir: str,
     parse each route then pays; caching the multi-KB payload was the r3
     scale-killer).  Routes with disjoint predicates each parse only
     their subset.
+
+    ``available_now=True`` (default) processes everything currently in
+    the source then stops — the testable drain mode; pass
+    ``processing_time='10 seconds'`` instead for a long-running tail.
+    Returns the StreamingQuery (caller awaits/stops it).
     """
-    from pyspark.sql import functions as F
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         sid = _checkpoint_stream_id(checkpoint_dir)
@@ -172,3 +116,13 @@ def run_stream_fanout(routes: dict, events: DataFrame, checkpoint_dir: str,
     elif processing_time:
         writer = writer.trigger(processingTime=processing_time)
     return writer.start()
+
+
+def run_stream(engine: CdcEngine, events: DataFrame, checkpoint_dir: str,
+               *, available_now: bool = True,
+               processing_time: str | None = None):
+    """Drive one engine from a streaming DataFrame: ``run_stream_fanout``
+    with a single route that receives every event."""
+    return run_stream_fanout({"main": (engine, None)}, events, checkpoint_dir,
+                             available_now=available_now,
+                             processing_time=processing_time)

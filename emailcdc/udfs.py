@@ -5,7 +5,9 @@ One ``mapInArrow`` pass over a change-event micro-batch produces an
 attachment / calendar / failure) as nullable structs — the Spark analog of
 the reference's multi-relationship fan-out (AbstractExtractEmailProcessor
 .java:16-32, SURVEY.md §2.1 R1) without parsing the content four times.
-Callers persist the envelope and split it with cheap filters.
+The engine writes the envelope once, flat (``record_type`` stays a data
+column), and the sink reads each table out of it with a ``record_type``
+filter; ``split_envelope`` gives the same split for an in-memory frame.
 
 Scale notes (100 TB design):
 - Only ``offset, repo, path, commit, lang, content`` cross the Arrow
@@ -26,7 +28,6 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -35,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, StringType
 
 from . import schemas
-from .extract import extract_event
+from .extract import extract_event, sha256_hex
 
 ENVELOPE = StructType(
     [
@@ -83,18 +84,20 @@ def _extract_partition(
             col["offset"], col["repo"], col["path"], col["commit"],
             col["lang"], col["content"], folders
         ):
+            # one sha256 per event: the snapshot row needs it for every
+            # lang, and extract_event reuses it for its payload rows
+            sha = sha256_hex(content) if content is not None else None
             result = extract_event(
                 repo, path, int(offset), commit, lang, content,
                 error_strategy=error_strategy,
                 missing_field_strategy=missing_field_strategy,
                 missing_field_substitution=missing_field_substitution,
                 folder_override=folder,
+                content_sha256=sha,
             )
             result["snapshot"] = [{
                 "repo": repo, "path": path, "commit": commit, "lang": lang,
-                "content_sha256": (hashlib.sha256(content.encode()).hexdigest()
-                                   if content is not None else None),
-                "last_offset": int(offset),
+                "content_sha256": sha, "last_offset": int(offset),
             }]
             for kind, key in (("message", "messages"),
                               ("attachment", "attachments"),

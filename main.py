@@ -115,7 +115,11 @@ def main(argv: list[str] | None = None) -> int:
         q.awaitTermination()
     elif args.cmd == "compact":
         sink = SnapshotParquetSink(spark, args.sink, n_buckets=args.n_buckets)
-        manifest = sink.compact_now(sink.current_snapshot_id() + 1)
+        current = sink.current_snapshot_id()
+        if current is None:
+            raise SystemExit(f"nothing to compact: {args.sink} holds no "
+                             "committed snapshot")
+        manifest = sink.compact_now(current + 1)
         print(f"compacted to snapshot {manifest.snapshot_id}")
     elif args.cmd == "vacuum":
         sink = SnapshotParquetSink(spark, args.sink)

@@ -171,11 +171,35 @@ class TestReplay:
         assert agg["hi"] == max(e["offset"] for e in EVENTS)
 
     def test_manifest_stats_recorded(self, spark, sink_dir):
+        """Every batch's manifest (counts, offset range) and lineage rows
+        match a pure-Python count over that batch's events, deletes
+        included."""
+        batch_size = 13
         eng = _engine(spark, sink_dir)
-        eng.replay(_events_df(spark), batch_size=1000)
-        manifest = eng.sink.read_manifest()
-        assert manifest.stats["event_count"] == len(EVENTS)
-        assert manifest.offset_lo == 0
+        results = eng.replay(_events_df(spark), batch_size=batch_size)
+        assert len(results) >= 3
+        lineage: dict = {}
+        for r in eng.table("lineage").collect():
+            lineage.setdefault(r["batch_id"], []).append(r)
+        deletes = 0
+        for res in results:
+            manifest = eng.sink.read_manifest(res.batch_id)
+            lo = (res.batch_id - 1) * batch_size
+            hi = lo + batch_size - 1
+            batch = [e for e in EVENTS if lo <= e["offset"] <= hi]
+            want = {"event_count": len(batch),
+                    "upsert_count": sum(e["op"] in ("I", "U") for e in batch),
+                    "delete_count": sum(e["op"] == "D" for e in batch)}
+            assert (manifest.offset_lo, manifest.offset_hi) == (lo, hi)
+            assert {k: manifest.stats[k] for k in want} == want
+            assert (res.event_count, res.upsert_count, res.delete_count) \
+                == tuple(want.values())
+            rows = lineage[res.batch_id]
+            assert sum(r["rows"] for r in rows) == len(batch)
+            assert all(lo <= r["min_offset"] <= r["max_offset"] <= hi
+                       for r in rows)
+            deletes += want["delete_count"]
+        assert deletes > 0
 
     def test_failure_rows_routed(self, spark, sink_dir):
         events = [
@@ -200,13 +224,13 @@ class TestSchemaEvolution:
             "repo string, path string, commit string, lang string,"
             " content_sha256 string, last_offset long",
         )
-        sink.commit(1, 0, 0, {"snapshot": base}, None)
+        sink.commit(1, 0, 0, {"snapshot": base})
         evolved = spark.createDataFrame(
             [("r1", "p2", "c", "txt", "sha2", 1, "new")],
             "repo string, path string, commit string, lang string,"
             " content_sha256 string, last_offset long, extra_col string",
         )
-        sink.commit(2, 1, 1, {"snapshot": evolved}, None)
+        sink.commit(2, 1, 1, {"snapshot": evolved})
         df = sink.read_table("snapshot")
         assert "extra_col" in df.columns
         rows = {r["path"]: r for r in df.collect()}
@@ -217,11 +241,11 @@ class TestSchemaEvolution:
         sink = SnapshotParquetSink(spark, sink_dir, n_buckets=4)
         base = spark.createDataFrame([("r1", "p1", 1)],
                                      "repo string, path string, v long")
-        sink.commit(1, 0, 0, {"snapshot": base}, None)
+        sink.commit(1, 0, 0, {"snapshot": base})
         bad = spark.createDataFrame([("r1", "p1", "oops")],
                                     "repo string, path string, v string")
         with pytest.raises(Exception, match="unsafe schema evolution"):
-            sink.commit(2, 1, 1, {"snapshot": bad}, None)
+            sink.commit(2, 1, 1, {"snapshot": bad})
 
 
 class TestSkew:

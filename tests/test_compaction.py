@@ -2,7 +2,10 @@
 
 import os
 
-from emailcdc import schemas
+import pytest
+
+import main
+from emailcdc import schemas, session
 from emailcdc.engine import CdcEngine
 from emailcdc.fixtures import expected_final_state, make_change_events
 from emailcdc.sink import SnapshotParquetSink
@@ -77,3 +80,14 @@ class TestCompaction:
                    batch_size=1)
         rows = _snap(eng)
         assert set(rows) == {("r2", "q.txt")}
+
+    def test_cli_compact_on_empty_sink_fails_clearly(self, spark, sink_dir,
+                                                     monkeypatch):
+        """``main.py compact`` on a sink with no committed snapshot exits
+        with a clear error instead of a TypeError.  The CLI gets the shared
+        session (get_spark would reconfigure it), and stop() is disarmed so
+        no path can stop it."""
+        monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+        monkeypatch.setattr(spark, "stop", lambda: None)
+        with pytest.raises(SystemExit, match="nothing to compact"):
+            main.main(["compact", "--sink", sink_dir])

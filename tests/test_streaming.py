@@ -21,6 +21,18 @@ def _write_chunk(spark, events, path):
         .coalesce(1).write.mode("append").parquet(path)
 
 
+def _drain(query, timeout: int = 180) -> None:
+    """Wait for a drain-mode (availableNow) query: it must terminate
+    within ``timeout`` seconds — a timeout fails the test instead of
+    letting it assert on a half-drained sink.  The query is stopped
+    either way."""
+    try:
+        assert query.awaitTermination(timeout), \
+            f"stream still running after {timeout}s"
+    finally:
+        query.stop()
+
+
 def _snap_keys(engine):
     return {(r["repo"], r["path"]) for r in engine.table("snapshot").collect()}
 
@@ -34,9 +46,8 @@ class TestStreaming:
         _write_chunk(spark, EVENTS[:half], src)
         _write_chunk(spark, EVENTS[half:], src)
         engine = CdcEngine(spark, SnapshotParquetSink(spark, sink_dir, n_buckets=8))
-        q = run_stream(engine, stream_events(spark, src, max_files_per_trigger=1),
-                       ckpt)
-        q.awaitTermination(180)
+        _drain(run_stream(engine, stream_events(spark, src, max_files_per_trigger=1),
+                          ckpt))
         assert _snap_keys(engine) == set(EXPECTED)
         manifest = engine.sink.read_manifest()
         assert manifest.batch_id >= 2  # maxFilesPerTrigger=1 → ≥2 epochs
@@ -47,11 +58,11 @@ class TestStreaming:
         sink_dir = str(tmp_path / "sink")
         _write_chunk(spark, EVENTS, src)
         engine = CdcEngine(spark, SnapshotParquetSink(spark, sink_dir, n_buckets=8))
-        run_stream(engine, stream_events(spark, src), ckpt).awaitTermination(180)
+        _drain(run_stream(engine, stream_events(spark, src), ckpt))
         before = _snap_keys(engine)
         msg_before = engine.table("messages").count()
         # restart with the same checkpoint: no new data → no new commits
-        run_stream(engine, stream_events(spark, src), ckpt).awaitTermination(180)
+        _drain(run_stream(engine, stream_events(spark, src), ckpt))
         assert _snap_keys(engine) == before
         assert engine.table("messages").count() == msg_before
 
@@ -62,12 +73,12 @@ class TestStreaming:
         half = len(EVENTS) // 2
         _write_chunk(spark, EVENTS[:half], src)
         engine = CdcEngine(spark, SnapshotParquetSink(spark, sink_dir, n_buckets=8))
-        run_stream(engine, stream_events(spark, src), ckpt).awaitTermination(180)
+        _drain(run_stream(engine, stream_events(spark, src), ckpt))
         partial = expected_final_state(EVENTS[:half])
         assert _snap_keys(engine) == set(partial)
         # second tranche arrives; a new drain picks up only the delta
         _write_chunk(spark, EVENTS[half:], src)
-        run_stream(engine, stream_events(spark, src), ckpt).awaitTermination(180)
+        _drain(run_stream(engine, stream_events(spark, src), ckpt))
         assert _snap_keys(engine) == set(EXPECTED)
 
     def test_stream_after_batch_replay_not_swallowed(self, spark, tmp_path):
@@ -89,12 +100,12 @@ class TestStreaming:
         # start at 0 — under the old epoch+1==snapshot scheme every one of
         # them would hit "batch_id <= CURRENT" and be dropped
         _write_chunk(spark, EVENTS[half:], src)
-        run_stream(engine, stream_events(spark, src), ckpt).awaitTermination(180)
+        _drain(run_stream(engine, stream_events(spark, src), ckpt))
         assert _snap_keys(engine) == set(EXPECTED)
         assert engine.last_epoch() == 0
         # restart with the same checkpoint: idempotent, nothing re-applied
         before = engine.table("messages").count()
-        run_stream(engine, stream_events(spark, src), ckpt).awaitTermination(180)
+        _drain(run_stream(engine, stream_events(spark, src), ckpt))
         assert engine.table("messages").count() == before
 
     def test_cleared_checkpoint_starts_fresh_namespace(self, spark, tmp_path):
@@ -108,20 +119,20 @@ class TestStreaming:
         half = len(EVENTS) // 2
         _write_chunk(spark, EVENTS[:half], src)
         engine = CdcEngine(spark, SnapshotParquetSink(spark, sink_dir, n_buckets=8))
-        run_stream(engine, stream_events(spark, src),
-                   str(tmp_path / "ckpt1")).awaitTermination(180)
+        _drain(run_stream(engine, stream_events(spark, src),
+                          str(tmp_path / "ckpt1")))
         assert engine.last_epoch() == 0
         assert engine.sink.read_manifest().stream_id is not None
         # checkpoint is LOST; second tranche arrives; new query re-reads
         # everything from epoch 0 — the old global watermark dropped it all
         _write_chunk(spark, EVENTS[half:], src)
-        run_stream(engine, stream_events(spark, src),
-                   str(tmp_path / "ckpt2")).awaitTermination(180)
+        _drain(run_stream(engine, stream_events(spark, src),
+                          str(tmp_path / "ckpt2")))
         assert _snap_keys(engine) == set(EXPECTED)
         # same (second) checkpoint restarts stay exactly-once
         before = engine.table("messages").count()
-        run_stream(engine, stream_events(spark, src),
-                   str(tmp_path / "ckpt2")).awaitTermination(180)
+        _drain(run_stream(engine, stream_events(spark, src),
+                          str(tmp_path / "ckpt2")))
         assert engine.table("messages").count() == before
 
     def test_rate_limited_microbatches(self, spark, tmp_path):
@@ -136,9 +147,9 @@ class TestStreaming:
         _write_chunk(spark, EVENTS[2 * third:], src)
         engine = CdcEngine(spark, SnapshotParquetSink(
             spark, str(tmp_path / "sink"), n_buckets=8))
-        run_stream(engine,
-                   stream_events(spark, src, max_files_per_trigger=1),
-                   ckpt).awaitTermination(240)
+        _drain(run_stream(engine,
+                          stream_events(spark, src, max_files_per_trigger=1),
+                          ckpt), 240)
         assert _snap_keys(engine) == set(EXPECTED)
         # three files → at least three epochs, watermark at the last one
         assert engine.last_epoch() >= 2
@@ -155,13 +166,11 @@ class TestStreaming:
         b = CdcEngine(spark, SnapshotParquetSink(
             spark, str(tmp_path / "sink_b"), n_buckets=8))
         routes = {"a": (a, None), "b": (b, None)}
-        run_stream_fanout(routes, stream_events(spark, src),
-                          ckpt).awaitTermination(180)
+        _drain(run_stream_fanout(routes, stream_events(spark, src), ckpt))
         assert _snap_keys(a) == set(EXPECTED)
         assert _snap_keys(b) == set(EXPECTED)
         na, nb = a.table("messages").count(), b.table("messages").count()
-        run_stream_fanout(routes, stream_events(spark, src),
-                          ckpt).awaitTermination(180)
+        _drain(run_stream_fanout(routes, stream_events(spark, src), ckpt))
         assert a.table("messages").count() == na
         assert b.table("messages").count() == nb
 
@@ -188,14 +197,13 @@ class TestStreaming:
         q = run_stream_fanout({"a": (a, None), "b": (dying_b, None)},
                               stream_events(spark, src), ckpt)
         with pytest.raises(Exception, match="simulated crash"):
-            q.awaitTermination(180)
-            q.processAllAvailable()  # surface the foreachBatch error
+            _drain(q)  # the foreachBatch error terminates the query
         assert _snap_keys(a) == set(expected_final_state(EVENTS[:]))  # A landed epoch 0
         na = a.table("messages").count()
         assert b_sink.read_manifest() is None  # B has nothing
         # restart, healthy B: the replayed epoch applies to B only
-        run_stream_fanout({"a": (a, None), "b": (b, None)},
-                          stream_events(spark, src), ckpt).awaitTermination(180)
+        _drain(run_stream_fanout({"a": (a, None), "b": (b, None)},
+                                 stream_events(spark, src), ckpt))
         assert _snap_keys(b) == set(EXPECTED)
         assert a.table("messages").count() == na
 
@@ -212,9 +220,9 @@ class TestStreaming:
         cold = CdcEngine(spark, SnapshotParquetSink(
             spark, str(tmp_path / "sink_cold"), n_buckets=8))
         pred = "repo like 'org0/hot%'"
-        run_stream_fanout(
+        _drain(run_stream_fanout(
             {"hot": (hot, pred), "cold": (cold, f"not ({pred})")},
-            stream_events(spark, src), ckpt).awaitTermination(180)
+            stream_events(spark, src), ckpt))
         hot_keys = _snap_keys(hot)
         cold_keys = _snap_keys(cold)
         assert hot_keys and cold_keys
@@ -244,7 +252,7 @@ class TestStreaming:
         sink_dir = str(tmp_path / "sink")
         _write_chunk(spark, EVENTS, src)
         engine = CdcEngine(spark, SnapshotParquetSink(spark, sink_dir, n_buckets=8))
-        run_stream(engine, stream_events(spark, src), ckpt).awaitTermination(180)
+        _drain(run_stream(engine, stream_events(spark, src), ckpt))
         epoch_before = engine.last_epoch()
         assert epoch_before is not None
         # a maintenance compaction (non-streaming commit) carries it forward
